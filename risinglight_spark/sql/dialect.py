@@ -19,6 +19,7 @@ timestamp literals, and quoted column aliases.
 from __future__ import annotations
 
 import datetime
+import decimal
 import math
 import re
 
@@ -618,6 +619,66 @@ def fmt_value(v) -> str:
     if isinstance(v, (datetime.date, datetime.datetime)):
         return str(v)
     return str(v)
+
+
+def fmt_column(col, dtype):
+    """``fmt_value`` over a whole Arrow column of Spark type ``dtype``:
+    a ``large_string`` array holding, for each value, the text
+    ``fmt_value`` gives the value a collected Row holds, and NULL where
+    the value is NULL.  Scalar types are formatted by Arrow casts; only
+    non-integral doubles, decimals below 1e-6, and nested, binary,
+    LTZ-timestamp and interval values go through Python."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    col = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    if isinstance(dtype, (T.IntegralType, T.BooleanType, T.DateType)):
+        text = pc.cast(col, pa.large_string())
+    elif isinstance(dtype, T.DecimalType):
+        text = pc.cast(col, pa.large_string())
+        if dtype.scale > 6:
+            # |v| < 1e-6 prints in exponent form.  A collected Row holds
+            # the Decimal Python parses from Java's engineering string
+            # ("100E-12" for 1E-10, so "1.00E-10"); Arrow prints "1.E-10".
+            small = pc.less(pc.abs(col), pa.scalar(decimal.Decimal("1e-6"), col.type))
+            small = small.fill_null(False)
+            if pc.any(small).as_py():
+                eng = [str(decimal.Decimal(d.to_eng_string()))
+                       for d in col.filter(small).to_pylist()]
+                text = pc.replace_with_mask(text, small, pa.array(eng, pa.large_string()))
+    elif isinstance(dtype, T.TimestampNTZType):
+        # Arrow always prints microseconds; datetime drops a zero fraction
+        text = pc.replace_substring_regex(
+            pc.cast(col, pa.large_string()), r"\.000000$", "")
+    elif isinstance(dtype, T.StringType):
+        text = pc.if_else(pc.equal(col, ""), "(empty)", col)
+    elif isinstance(dtype, (T.FloatType, T.DoubleType)):
+        null = ~col.is_valid().to_numpy(zero_copy_only=False)
+        x = pc.cast(col, pa.float64()).fill_null(0).to_numpy()
+        nan = np.isnan(x)
+        # the values that print as int; |x| < 2**63 also excludes inf
+        whole = (np.abs(x) < 2.0**63) & (x == np.trunc(x))
+        ints = pa.array(np.where(whole, x, 0).astype(np.int64), mask=null)
+        text = pc.if_else(pa.array(nan), "NaN", pc.cast(ints, pa.large_string()))
+        rest = ~(nan | whole)
+        if rest.any():
+            text = pc.replace_with_mask(
+                text, pa.array(rest),
+                pa.array([fmt_value(v) for v in x[rest].tolist()], pa.large_string()),
+            )
+    else:
+        # nested, binary, LTZ timestamps, intervals, variant: the Row
+        # Spark's own Arrow-to-Row conversion gives, then fmt_value
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        conv = ArrowTableToRowsConversion._create_converter(dtype)
+        text = pa.array(
+            [None if v is None else fmt_value(v) for v in map(conv, col.to_pylist())],
+            pa.large_string(),
+        )
+    return text.cast(pa.large_string())
 
 
 def _cells_match(got: str, want: str) -> bool:

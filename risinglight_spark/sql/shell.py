@@ -111,7 +111,7 @@ class Shell:
         return "\n".join(out)
 
 
-def _split_statements(text: str) -> list[str]:
+def split_statements(text: str) -> list[str]:
     """Split on top-level semicolons (not inside quotes)."""
     parts, buf, q = [], [], None
     for ch in text:
@@ -162,7 +162,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command or args.file:
         text = args.command or open(args.file).read()
-        for stmt in _split_statements(text):
+        for stmt in split_statements(text):
             run_one(stmt)
         return 0
 
@@ -187,7 +187,7 @@ def main(argv: list[str] | None = None) -> int:
             stmt = "\n".join(buf)
             buf = []
             try:
-                for s in _split_statements(stmt):
+                for s in split_statements(stmt):
                     run_one(s)
             except Exception as exc:
                 print(f"error: {exc}")

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import DataFrame
 
-from risinglight_spark.sql.shell import Shell, _split_statements, is_query
+from risinglight_spark.sql.shell import Shell, split_statements, is_query
 
 
 @pytest.fixture(scope="module")
@@ -71,7 +71,7 @@ def test_render_is_aligned(shell):
 def test_is_query_and_split():
     assert is_query("SELECT 1") and is_query("  with x as (select 1) select * from x")
     assert not is_query("INSERT INTO t VALUES (1)")
-    assert _split_statements("select ';'; select 2;") == ["select ';'", "select 2"]
+    assert split_statements("select ';'; select 2;") == ["select ';'", "select 2"]
 
 
 def test_set_mock_rowcount_accepted(spark):
