@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -284,7 +285,7 @@ def main() -> None:
     # entries; the other 215 have scale probes but no per-round
     # wall-time trend.  Each round benches a different 50-entry slice
     # (1 sample each — trend data, not a latency claim), rotating on
-    # the count of BENCH_r*.json files the driver has recorded so far.
+    # the highest round N among files named exactly BENCH_r<N>.json.
     annex: dict[str, float] = {}
     slice_idx = 0
     # Entries whose single-sample annex timings tripped the 1.5x drift
@@ -302,10 +303,12 @@ def main() -> None:
         pool = [n for n in sorted(entries) if n not in per_query]
         width = 50
         n_slices = max(1, -(-len(pool) // width))
-        n_rounds = len(
-            [f for f in os.listdir(repo) if f.startswith("BENCH_r")]
-        )
-        slice_idx = n_rounds % n_slices
+        rounds = [
+            int(m.group(1))
+            for f in os.listdir(repo)
+            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
+        ]
+        slice_idx = max(rounds, default=0) % n_slices
         chunk = pool[slice_idx * width : (slice_idx + 1) * width]
         chunk += [
             n for n in ANNEX_RECHECK if n in entries and n not in chunk
@@ -589,20 +592,6 @@ def main() -> None:
         print(f"# pinned baseline unavailable ({exc})", file=sys.stderr)
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    # Round-over-round comparability: the headline suite GROWS as
-    # operators land (39 queries in round 2, more each round), so the
-    # all-queries total is not apples-to-apples across rounds.
-    # r02_subset_total sums exactly the queries BENCH_r02 timed.
-    r02_names = [n for n in names if n.startswith("tpch_q")] + [
-        "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-        "ann_cosine_topk", "vector_l2_topk", "text_quality_scores",
-        "text_corpus_stats", "pipeline_clean_corpus",
-        "events_sessionization", "events_tumbling_window",
-        "events_asof_join", "events_range_join", "pack_sequences",
-        "text_repetition_filter", "text_decontaminate",
-        "text_line_dedup_c4", "pipeline_pretraining_e2e",
-    ]
-    r02_total = sum(per_query.get(n, 0.0) for n in r02_names)
     full = {
         "metric": "headline_suite_total",
         "value": round(total, 3),
@@ -610,7 +599,6 @@ def main() -> None:
         "queries": per_query,
         "sf": float(sf) if sf else None,
         "n_queries": len(per_query),
-        "r02_subset_total": round(r02_total, 3),
         "git_sha": sha,
         "git_dirty": dirty,
         "samples": samples,
@@ -626,14 +614,6 @@ def main() -> None:
         # finding (mid-run drift; see calib_sec vs calib_sec_after).
         "value_calibrated": round(
             total * (CALIB_REF / ((calib + calib_after) / 2)), 3
-        ),
-        # Definition change r12 (ADVICE r12): denominator is the MEAN
-        # of before/after kernels; r11-and-earlier used the pre-suite
-        # kernel alone.  Cross-round ratios vs <=r11 calibrated totals
-        # must adjudicate against this field.
-        "calib_definition": "mean(before,after) since r12; pre-suite only <=r11",
-        "r02_subset_calibrated": round(
-            r02_total * (CALIB_REF / ((calib + calib_after) / 2)), 3
         ),
         "vs_pinned_baseline": vs_pinned,
         "vs_pinned_sf1": vs_pinned_sf1,

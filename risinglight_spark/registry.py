@@ -76,765 +76,15 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
-# The driver's correctness gate verifies a bounded prefix of the
-# registry (exactly the first 50 entries, in registration order).
-# Rotate the highest-value still-unverified queries to the front each
-# round so the cumulative set of driver-verified entries grows:
-#   r2 proved relational / joins / aggregates / first window block;
-#   r3 proved TPC-H q1-q22 + dedup + vector + text + pipeline + events
-#      headliners (the _R3_VERIFIED block below);
-#   r4 (this list's first 50 = _R4_GATE): bloom join, z-order,
-#      recursive CTE, ensemble dedup, eval queries, streaming custom
-#      source/sink/outer-join/RocksDB, RF1/RF2, IVF/multiprobe/PQ
-#      prerequisites, text corpus stats;
-#   r5 (this list's first 50 = _R5_GATE): DSIR, KL, dup-ngram spans,
-#      kNN/NB/PQ/ADC/IVF-PQ, SCD2+PIT, co-occurrence, DAU/WAU, bitmap
-#      distinct, fuzzy join, LPA/PageRank/triangles, MLM, entropy,
-#      hybrid RRF, data quality, ANY/ALL, BPE, graphs, windows;
-#   r6 (this list's first 50 = _R6_GATE): r5 overflow + the
-#      now-oracle-bearing sketch entries + salted/DPP joins, window
-#      frames, subqueries, set ops, scalar-expression libraries;
-#   r7 (_R7_QUEUE, staged next): text miners, events analytics,
-#      multimodal, DDL/catalog/copy round-trips, streaming built-ins,
-#      plus the round-6 additions (mm_decode_pixels, ml_knn_eval_ivf,
-#      reservoir/asof-nearest/containment, count-min sketch, NSW
-#      graph search, incremental IVF upsert, real pixel resize, WAV
-#      audio features, image dHash dedup).  56 entries — the gate
-#      fronts the first 50; the remainder rolls to r8, after which
-#      every registry entry will have a driver-verified row.
-# Check locally: python tools/oracle_check.py <sf0.01> --first 50.
-
-# Driver-verified in CORRECTNESS_r03.json (kept behind the rotation).
-_R3_VERIFIED: tuple[str, ...] = (
-    *[f"tpch_q{i}" for i in range(1, 23)],
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_minhash_verified",
-    "dedup_exact_keep_best",
-    "dedup_connected_components",
-    "dedup_substring_contained",
-    "vector_distance_ops",
-    "vector_l2_topk",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "semantic_search_e2e",
-    "text_token_counts",
-    "text_lang_id",
-    "text_quality_scores",
-    "text_fingerprint",
-    "text_line_dedup_c4",
-    "text_decontaminate",
-    "text_bm25_topk",
-    "pipeline_clean_corpus",
-    "pipeline_pretraining_e2e",
-    "pack_sequences",
-    "events_sessionization",
-    "events_asof_join",
-    "events_range_join",
-    "events_tumbling_window",
-)
-
-# Round-4 driver gate: the 50 entries staged as "next in line" in the
-# round-3 registry (previous positions 50-99), now fronted.
-_R4_GATE: tuple[str, ...] = (
-    "mm_decode_stub",
-    "sample_training_order",
-    "text_chunk_overlap",
-    "events_pattern_seq",
-    "join_bloom_prefilter",
-    "dedup_incremental_batch",
-    "sample_topk_per_group",
-    "copy_zorder_clustered",
-    "streaming_foreachbatch_upsert",
-    "ann_batch_topk_join",
-    "agg_mode_deterministic",
-    "subquery_recursive_cte",
-    "setop_unpivot",
-    "join_null_safe_eq",
-    "events_interval_union",
-    "pipeline_dataset_card",
-    "streaming_chained_agg",
-    "vector_covariance_matrix",
-    "events_linear_trend",
-    "events_transition_matrix",
-    "text_keywords_tfidf",
-    "dedup_multi_signal",
-    "ann_recall_eval",
-    "dedup_minhash_eval",
-    "streaming_custom_source",
-    "streaming_custom_sink",
-    "streaming_interval_join_outer",
-    "streaming_rocksdb_state",
-    "tpch_refresh_rf1_rf2",
-    "expr_try_functions",
-    # agg_sketch_mergeable held this r4 slot (it returned
-    # `err: no_oracle` there); now oracle-bearing, it is staged in
-    # _R6_QUEUE instead — listing it in both would put a duplicate in
-    # _PRIORITY and silently shift every later 50-slot gate boundary.
-    "expr_higher_order_library",
-    "events_watermark_lateness",
-    "ann_index_partitioned",
-    "dedup_minhash_index_materialized",
-    "dedup_incremental_minhash",
-    "ann_multiprobe",
-    "events_pareto_share",
-    "text_zipf_fit",
-    "ann_ivf_probe",
-    "vector_group_centroid",
-    "vector_normalize",
-    "vector_kmeans_step",
-    "vector_quantize_int8",
-    "ann_matryoshka_truncated",
-    "text_corpus_stats",
-    "text_doc_frequency",
-    "text_top_tokens",
-    "text_bpe_pair_stats",
-    "text_pii_scrub",
-)
-
-# Round-5 driver gate: the 50 entries staged in the round-4 registry's
-# _R5_QUEUE, minus `agg_heavy_hitters_sketch` — it has no DuckDB oracle
-# (sketch output), and the round-4 gate burned a slot on exactly that
-# kind of `err: no_oracle` row.  No-oracle entries stay out of the
-# rotated 50-prefix permanently; they are covered by error-bound
-# pytests instead (tests/test_properties.py).
-_R5_GATE: tuple[str, ...] = (
-    "text_dsir_importance",
-    "text_kl_source_divergence",
-    "dedup_duplicate_ngram_spans",
-    "ml_knn_eval",
-    "ml_naive_bayes_langid",
-    "vector_pq_encode",
-    "ann_pq_adc_topk",
-    "ann_ivf_pq_search",
-    "events_scd2_history",
-    "events_pit_join_scd2",
-    "events_cooccurrence_lift",
-    "events_dau_wau",
-    "agg_bitmap_exact_distinct",
-    "join_fuzzy_levenshtein",
-    "graph_label_propagation",
-    "graph_pagerank",
-    "graph_triangle_count",
-    "text_mlm_masking",
-    "text_token_entropy",
-    "search_hybrid_rrf",
-    "pipeline_data_quality",
-    "subquery_any_all_rewrite",
-    "sample_dsir_resample",
-    "dedup_semdedup",
-    "vector_kmeans_train",
-    "vector_pca_power_iteration",
-    "ml_logreg_train_step",
-    "text_bpe_train",
-    "text_bpe_encode",
-    "text_bigram_lm_score",
-    "text_langid_eval",
-    "text_oov_rate",
-    "pipeline_drop_reasons",
-    "events_variant_json",
-    "events_type_islands",
-    "events_debounce",
-    "events_cumulative_uniques",
-    "events_ab_ttest",
-    "events_ab_ratio_delta",
-    "events_forecast_backtest",
-    "mix_temperature_resample",
-    "ml_kfold_split",
-    "pairs_contrastive_mining",
-    "agg_weighted_median",
-    "agg_histogram_equiwidth",
-    "window_exclude_current",
-    "unnest_with_ordinality",
-    "join_interval_bucketed_global",
-    "copy_compact_small_files",
-    "streaming_transform_with_state",
-)
-
-# Round-6 driver gate: the r5 overflow first (round-4 additions that
-# did not fit in the 50-slot gate), then the sketch entries — now
-# carrying exact-value + error-bound-boolean outputs their oracles can
-# replay (no more `err: no_oracle` rows anywhere) — then 41 more
-# never-driver-verified entries: salted/DPP joins, window frames,
-# subquery expressions, set operations, and the scalar-expression
-# libraries.  47 of the 50 have no prior driver row; the 3 sketch
-# entries convert old `err: no_oracle` rows to green.
-_R6_GATE: tuple[str, ...] = (
-    "explain_cost_estimates",
-    "ann_filtered_topk",
-    "events_attribution_last_touch",
-    "sample_systematic_pps",
-    "dedup_cluster_keep_best",
-    "agg_heavy_hitters_sketch",
-    "agg_sketch_mergeable",
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    "join_salted_skew",
-    "join_dpp_partition_pruned",
-    "agg_incremental_merge",
-    "window_rows_sliding_frame",
-    "window_range_frame",
-    "window_ntile",
-    "window_value_functions",
-    "window_percent_rank_cume",
-    "subquery_scalar",
-    "subquery_exists_correlated",
-    "subquery_not_exists",
-    "subquery_in_select",
-    "subquery_correlated_scalar",
-    "subquery_cte",
-    "subquery_scalar_in_select",
-    "setop_union_all",
-    "setop_union_distinct",
-    "setop_intersect",
-    "setop_except",
-    "setop_intersect_all",
-    "setop_except_all",
-    "expr_case_if",
-    "expr_in_between_like",
-    "expr_null_checks",
-    "expr_boolean_3vl",
-    "expr_div_by_zero",
-    "expr_string_funcs",
-    "expr_extract_date",
-    "expr_cast_matrix",
-    "expr_interval_arith",
-    "expr_typed_literals",
-    "expr_string_library",
-    "expr_math_library",
-    "expr_datetime_library",
-    "expr_regexp_library",
-    "expr_bitwise_ops",
-    "expr_array_library",
-    "expr_hash_json_library",
-    "vector_dim_variance_rank",
-    "pack_greedy_bins",
-    "sample_hash_stratified",
-)
-
-# Round-8 rotation: the 56 never-driver-verified entries, fronted so the
-# driver's bounded 50-entry gate finally covers them (text miners, events
-# analytics, multimodal, DDL/catalog/copy round-trips, streaming built-ins).
-# The first 50 land in CORRECTNESS_r08; the LAST SIX entries of this tuple
-# (streaming_stateful_max, streaming_session_window, streaming_interval_join,
-# streaming_sliding_counts, streaming_static_enrich,
-# streaming_dropdup_within_watermark) miss the r8 gate and are the staged
-# ROUND-9 TAIL — after r9 fronts them, driver coverage is exactly 303/303.
-_R7_QUEUE: tuple[str, ...] = (
-    "text_quality_percentile_cut",
-    "sample_token_budget",
-    "mix_source_weights",
-    "text_ccnet_buckets",
-    "text_unigram_logprob",
-    "text_repetition_filter",
-    "text_gopher_rules",
-    "events_sliding_window",
-    "events_json_props",
-    "events_user_daily",
-    "events_funnel",
-    "events_hourly_gapfill",
-    "events_retention_cohorts",
-    "events_windowed_topk",
-    "events_anomaly_zscore",
-    "events_ewma_user",
-    "events_time_rollup",
-    "events_ohlc_bars",
-    "mm_binary_payload",
-    "mm_metadata_struct",
-    "mm_frame_sample",
-    "mm_resize_stub",
-    "mm_decode_pixels",
-    "mm_resize_pixels",
-    "mm_audio_wav_features",
-    "mm_image_dhash_dedup",
-    "ml_knn_eval_ivf",
-    "sample_reservoir_weighted",
-    "events_asof_nearest",
-    "dedup_containment",
-    "agg_count_min_sketch",
-    "ann_nsw_graph_search",
-    "ann_ivf_incremental_upsert",
-    "ddl_create_insert_delete",
-    "ddl_create_view",
-    "ddl_sql_udf",
-    "copy_roundtrip_csv",
-    "catalog_pg_tables",
-    "catalog_pg_attribute",
-    "explain_plan_props",
-    "pragma_session_vars",
-    "ddl_create_index",
-    "analyze_query_stats",
-    "copy_roundtrip_json",
-    "copy_partitioned_parquet",
-    "copy_roundtrip_orc",
-    "source_tbl_roundtrip",
-    "copy_parquet_codecs",
-    "streaming_tumbling_counts",
-    "streaming_dedup_keys",
-    "streaming_stateful_max",
-    "streaming_session_window",
-    "streaming_interval_join",
-    "streaming_sliding_counts",
-    "streaming_static_enrich",
-    "streaming_dropdup_within_watermark",
-)
-
-# Round-9 tail: the 6 entries that missed the bounded r8 gate (positions
-# 51-56 of _R7_QUEUE above).  Fronting them closes lifetime driver
-# coverage at exactly 303/303 — every registry entry hash-verified by the
-# driver at least once.
-_R9_TAIL: tuple[str, ...] = (
-    "streaming_stateful_max",
-    "streaming_session_window",
-    "streaming_interval_join",
-    "streaming_sliding_counts",
-    "streaming_static_enrich",
-    "streaming_dropdup_within_watermark",
-)
-
-# Entries whose Spark-side implementation was rewritten in rounds 8-9
-# (distributed-rank primitives, persist-LRU, SemDeDup hot-cell cap, KL
-# broadcast form): each was individually hash-verified at sf0.01 after
-# its rewrite, but a driver CORRECTNESS row at the CURRENT code is the
-# official record — front them right after the 6-entry tail so the
-# bounded 50-slot gate re-verifies every rewrite this round.
-_R9_RECHECK: tuple[str, ...] = (
-    "dedup_semdedup",
-    "agg_weighted_median",
-    "sample_systematic_pps",
-    "text_oov_rate",
-    "text_unigram_logprob",
-    "text_bigram_lm_score",
-    "text_dsir_importance",
-    "ml_naive_bayes_langid",
-    "sample_token_budget",
-    "pack_sequences",
-    "sample_training_order",
-    "join_fuzzy_levenshtein",
-    "text_kl_source_divergence",
-    "text_ccnet_buckets",
-    "text_quality_percentile_cut",
-    "vector_dim_variance_rank",
-    "pipeline_pretraining_e2e",
-    "vector_kmeans_train",
-)
-
-# Round-10 maintenance gate: lifetime driver coverage closed at
-# 303/303 in round 9, so the bounded 50-slot gate switches from
-# "never-verified first" to a STALENESS rotation — each round
-# re-confirms the 50 entries with the OLDEST prior driver row, so no
-# entry's official record ages indefinitely.  Computed by unioning
-# CORRECTNESS_r1..r9 (latest round each entry was hash-green, ties
-# broken by name): these 50 were last driver-verified in round 2
-# (the 47 relational/agg/join/window foundations) and round 3 (first
-# two ANN entries).  Regenerate next round by the same rule.
-_R10_GATE: tuple[str, ...] = (
-    "agg_bool_logical",
-    "agg_cube",
-    "agg_grouping_id",
-    "agg_grouping_sets",
-    "agg_hash_group",
-    "agg_having",
-    "agg_min_max_types",
-    "agg_percentiles",
-    "agg_pivot",
-    "agg_rollup",
-    "agg_salted_skew",
-    "agg_simple",
-    "agg_sorted_key",
-    "agg_stats_library",
-    "agg_string_listagg",
-    "avg_rewrite",
-    "count_distinct",
-    "count_star_and_col",
-    "distinct_on",
-    "distinct_pair",
-    "empty_false_filter",
-    "filter_pushdown",
-    "first_last_pinned",
-    "join_anti",
-    "join_bucketed_colocated",
-    "join_cross_tiny",
-    "join_full_outer",
-    "join_hash_residual",
-    "join_inner_hash",
-    "join_lateral_topn",
-    "join_left_outer",
-    "join_nl_anti",
-    "join_nl_semi",
-    "join_nl_theta",
-    "join_right_outer",
-    "join_semi",
-    "limit_offset",
-    "merge_join",
-    "order_nulls_first",
-    "proj_expressions",
-    "scan_projected",
-    "topn",
-    "values_rows",
-    "window_lag_lead",
-    "window_partition_agg",
-    "window_rank_dense",
-    "window_row_number",
-    "window_running_sum",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-)
-
-# Entries whose implementations were rewritten in round 10 (two-phase
-# local-top-k kNN scoring; bigram-LM and DSIR models turned into
-# memoized index assets): front them so the official driver record
-# reflects the code as it stands, same policy as _R9_RECHECK.  The
-# staleness slots they displace rotate back in next round.
-_R10_RECHECK: tuple[str, ...] = (
-    "ml_knn_eval",
-    "ml_knn_eval_ivf",
-    "text_bigram_lm_score",
-    "text_dsir_importance",
-    "sample_dsir_resample",
-    # new in round 10 (never driver-verified): D4 cluster-balanced
-    # sampling over the memoized IVF clustering assets, and SoftDedup
-    # duplication-degree reweighting over the CC closure
-    "sample_cluster_balanced",
-    "dedup_soft_weights",
-)
-
-# Round-11 recheck: the only two registry entries whose official driver
-# row predates their current implementation — both were rewritten in
-# round 10 (commit 38bcd7a: IVF probe argmin moved driver-side over the
-# cached centroid asset; the PQ query LUT memoized) but were left out of
-# _R10_RECHECK.  Fronting them restores the "every rewrite has a driver
-# row at current code" invariant kept since round 9.
-_R11_RECHECK: tuple[str, ...] = (
-    "ann_ivf_pq_search",
-    "ann_pq_adc_topk",
-    # Rewritten IN round 11, fronted the same round so no provenance
-    # gap opens (the lesson of the r10 ANN pair): nsw_edges gained the
-    # NSW_MAX_GROUP sub-group split (plan change: a sizes broadcast
-    # join), and the distributed-rank/prefix-sum helpers gained the
-    # _persist_bounded sameResult hit-check and the Decimal
-    # accumulator branch — front their heaviest consumers.
-    "ann_nsw_graph_search",
-    "sample_systematic_pps",
-    "sample_training_order",
-    "text_quality_percentile_cut",
-)
-
-# New in round 11 (never driver-verified): per-source Pareto-front
-# (skyline) quality selection, the leakage-safe cluster-grouped
-# train/val split, closed-form OLS via distributed normal equations,
-# and greedy k-center coreset selection.  With the 6-entry recheck
-# above, the bounded gate keeps the first 40 of _R11_GATE — its last
-# eight names (tpch_q2/q20/q21/q22/q3/q4/q5/q6) slip to the head of
-# next round's staleness rotation.
-_R11_NEW: tuple[str, ...] = (
-    "pipeline_pareto_front",
-    "sample_leakage_safe_split",
-    "ml_linreg_normal_eq",
-    "sample_coreset_kcenter",
-)
-
-# Round-11 staleness rotation: the 48 entries with the OLDEST prior
-# driver row (unioning CORRECTNESS_r1..r10; latest hash-green round per
-# entry, ties broken by name): the 5 round-2 window entries that missed
-# the bounded round-10 gate, then 43 of the 48 round-3 entries (TPC-H
-# q1-q22 minus q7/q8/q9, the dedup family, text miners, events).  The
-# 5 round-3 leftovers (tpch_q7/q8/q9, vector_distance_ops,
-# vector_l2_topk) head next round's rotation.
-_R11_GATE: tuple[str, ...] = (
-    "window_lag_lead",
-    "window_partition_agg",
-    "window_rank_dense",
-    "window_row_number",
-    "window_running_sum",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "dedup_connected_components",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_exact_keep_best",
-    "dedup_minhash_lsh",
-    "dedup_minhash_verified",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_substring_contained",
-    "events_asof_join",
-    "events_range_join",
-    "events_sessionization",
-    "events_tumbling_window",
-    "pipeline_clean_corpus",
-    "semantic_search_e2e",
-    "text_bm25_topk",
-    "text_decontaminate",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_line_dedup_c4",
-    "text_quality_scores",
-    "text_token_counts",
-    "tpch_q1",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-)
-
-# Round-12 recheck: entries whose implementation was rewritten THIS
-# round — fronted the same round so no provenance gap opens (the
-# standing invariant since round 9).  ann_nsw_graph_search: the 2-hop
-# beam probe became a driver-side bounded frontier loop (identical
-# candidate set; SCALE.md round-12 outlier adjudication).
-_R12_RECHECK: tuple[str, ...] = (
-    "ann_nsw_graph_search",
-    # pipeline_pareto_front: phase-2 per-source merge rewritten as the
-    # hierarchical salt-tree promised in round 11 (VERDICT r11 item 5).
-    "pipeline_pareto_front",
-    # ml_linreg_normal_eq: degenerate-determinant guard pinned on both
-    # engines (ADVICE r11) — result unchanged on non-degenerate input,
-    # but the plan now carries the NULLIF/when guard.
-    "ml_linreg_normal_eq",
-    # _ivf_argmin_assign consumers: the shared centroid-argmin helper
-    # was rewritten from crossJoin -> min(struct) (a SortAggregate that
-    # sorted all n x C distance rows — the O(n x C) scratch-disk find
-    # of the round-12 bounded-heap escalation, SCALE.md) to the
-    # vectorized Arrow assignment over the collected centroid asset.
-    "dedup_semdedup",
-    "ann_ivf_pq_search",
-    "ann_ivf_incremental_upsert",
-    "ml_knn_eval_ivf",
-    "sample_cluster_balanced",
-    "vector_kmeans_step",
-    "vector_kmeans_train",
-    # pipeline_pretraining_e2e: survivor-set persist became DISK_ONLY
-    # after the 32x bounded-heap OOM find (SCALE.md round-12).
-    "pipeline_pretraining_e2e",
-    # New in round 12 (never driver-verified): unigram-LM tokenizer
-    # Viterbi-EM round (VERDICT r11 item 8 — completes the tokenizer
-    # pair beside BPE train/encode).
-    "text_unigram_lm_step",
-)
-
-# Round-12 staleness rotation (VERDICT r11 item 3): the 13 entries whose
-# latest driver row is still round 3 — the 8 TPC-H entries displaced
-# from the bounded r11 gate (registry history above) plus the 5 r3
-# leftovers — then the head of the round-4 cohort (alphabetical within
-# round, the same total order every rotation has used).  The recheck
-# block above grew to 11 entries as round-12 rewrites landed (NSW
-# frontier, pareto, linreg, the 5 argmin-assign consumers, 2 kmeans
-# entries, plus the new unigram entry), so the bounded 50-slot gate
-# keeps the first 39 of the 50 names below; the last 11 — setop_unpivot
-# through text_corpus_stats (the streaming block, subquery_recursive_
-# cte, text_bpe_pair_stats, text_chunk_overlap, text_corpus_stats) —
-# slip to the head of the round-13 staleness rotation, the same
-# explicitly-tracked displacement discipline as r11's 8 TPC-H slips.
-# Round-13 recheck (standing provenance invariant: any rewrite is
-# fronted into the SAME round's gate).  dedup_semdedup: the eager
-# centroid-collect moved inside build() (the r12 +43% bench regression
-# fix — plan semantics identical, oracle unchanged); ml_knn_eval:
-# KNN_TEST_CAP now ENFORCED as an id-range predicate in both the Spark
-# plan and the oracle (never binds at driver SFs); text_oov_rate: the
-# per-call eager localCheckpoint of the (lang, token) count table
-# became the memoized oov_per_lt asset (same defect class as the
-# semdedup fix); text_unigram_logprob: the per-call localCheckpoint
-# of the (doc_id, tok, k) bag became a memoized vocab-sized LM asset
-# with the bag re-derived lazily in the scoring join.
-# dedup_duplicate_ngram_spans was also rewritten (gram-stream
-# checkpoint -> memoized >1-key dup index) but already sits in the
-# _R13_GATE staleness block below.
-_R13_RECHECK: tuple[str, ...] = (
-    "dedup_semdedup",
-    "ml_knn_eval",
-    "text_oov_rate",
-    "text_unigram_logprob",
-    # New in round 13 (never driver-verified): epsilon-ball range
-    # search with lossless triangle-inequality IVF cell pruning — the
-    # ANN query shape the family lacked (registry 311) — and the
-    # DoReMi multiplicative mixture-weight step (registry 312), the
-    # LEARNING piece of the sampling/mixture family.
-    "ann_range_search_ivf",
-    "mix_doremi_weight_update",
-)
-
-# Round-13 staleness rotation (VERDICT r12 item 3): the 22 entries whose
-# latest driver row is still round 4 (including the 11 slipped from the
-# bounded r12 gate — setop_unpivot through text_corpus_stats — plus the
-# streaming custom source/sink family, recursive CTE, the vector
-# utility family, tpch_refresh_rf1_rf2) followed by the 28 oldest
-# round-5 rows (alphabetical within round — the same total order every
-# rotation has used; computed by unioning CORRECTNESS_r1..r12, latest
-# hash-green round per entry).  With the 6-entry recheck block above,
-# the bounded 50-slot gate keeps the first 44 of the 50 names below;
-# the last 6 — pairs_contrastive_mining, pipeline_data_quality,
-# pipeline_drop_reasons, search_hybrid_rrf,
-# streaming_transform_with_state, subquery_any_all_rewrite — slip to
-# the head of the round-14 rotation, the same explicitly-tracked
-# displacement discipline as r11/r12.
-_R13_GATE: tuple[str, ...] = (
-    "sample_topk_per_group",
-    "setop_unpivot",
-    "streaming_chained_agg",
-    "streaming_custom_sink",
-    "streaming_custom_source",
-    "streaming_foreachbatch_upsert",
-    "streaming_interval_join_outer",
-    "streaming_rocksdb_state",
-    "subquery_recursive_cte",
-    "text_bpe_pair_stats",
-    "text_chunk_overlap",
-    "text_corpus_stats",
-    "text_doc_frequency",
-    "text_keywords_tfidf",
-    "text_pii_scrub",
-    "text_top_tokens",
-    "text_zipf_fit",
-    "tpch_refresh_rf1_rf2",
-    "vector_covariance_matrix",
-    "vector_group_centroid",
-    "vector_normalize",
-    "vector_quantize_int8",
-    "agg_bitmap_exact_distinct",
-    "agg_histogram_equiwidth",
-    "copy_compact_small_files",
-    "dedup_duplicate_ngram_spans",
-    "events_ab_ratio_delta",
-    "events_ab_ttest",
-    "events_cooccurrence_lift",
-    "events_cumulative_uniques",
-    "events_dau_wau",
-    "events_debounce",
-    "events_forecast_backtest",
-    "events_pit_join_scd2",
-    "events_scd2_history",
-    "events_type_islands",
-    "events_variant_json",
-    "graph_label_propagation",
-    "graph_pagerank",
-    "graph_triangle_count",
-    "join_interval_bucketed_global",
-    "mix_temperature_resample",
-    "ml_kfold_split",
-    "ml_logreg_train_step",
-    "pairs_contrastive_mining",
-    "pipeline_data_quality",
-    "pipeline_drop_reasons",
-    "search_hybrid_rrf",
-    "streaming_transform_with_state",
-    "subquery_any_all_rewrite",
-)
-
-_R12_GATE: tuple[str, ...] = (
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "vector_distance_ops",
-    "vector_l2_topk",
-    "agg_mode_deterministic",
-    "ann_batch_topk_join",
-    "ann_index_partitioned",
-    "ann_ivf_probe",
-    "ann_matryoshka_truncated",
-    "ann_multiprobe",
-    "ann_recall_eval",
-    "copy_zorder_clustered",
-    "dedup_incremental_batch",
-    "dedup_incremental_minhash",
-    "dedup_minhash_eval",
-    "dedup_minhash_index_materialized",
-    "dedup_multi_signal",
-    "events_interval_union",
-    "events_linear_trend",
-    "events_pareto_share",
-    "events_pattern_seq",
-    "events_transition_matrix",
-    "events_watermark_lateness",
-    "expr_higher_order_library",
-    "expr_try_functions",
-    "join_bloom_prefilter",
-    "join_null_safe_eq",
-    "mm_decode_stub",
-    "pipeline_dataset_card",
-    "sample_topk_per_group",
-    "setop_unpivot",
-    "streaming_chained_agg",
-    "streaming_custom_sink",
-    "streaming_custom_source",
-    "streaming_foreachbatch_upsert",
-    "streaming_interval_join_outer",
-    "streaming_rocksdb_state",
-    "subquery_recursive_cte",
-    "text_bpe_pair_stats",
-    "text_chunk_overlap",
-    "text_corpus_stats",
-)
-
-# First-occurrence dedupe at construction: earlier rounds' comprehension
-# filters let 17 duplicate names slip in (they only worked because
-# collect() dedupes via dict first-occurrence).  dict.fromkeys makes a
-# duplicate structurally impossible, so the 50-slot gate boundary can
-# never silently shift again.
-# Round-16 recheck (standing provenance invariant: any rewrite or new
-# entry is fronted into the SAME round's gate — VERDICT r15 item 1).
-# These are the eight entries whose operator code the round-15
-# optimizer rewrote but which never entered _R15_RECHECK (the registry
-# was populated before the rewrites landed): the GEMM two-phase kNN
-# kernel (ml_knn_eval, ml_knn_eval_ivf — pipeline_ops._knn_local_topk),
-# the one-pass Arrow DSIR scorer (text_dsir_importance,
-# sample_dsir_resample — dsir_score_pandas), the banded 3-arg
-# levenshtein + memoized fuzzy_rank blocking index
-# (join_fuzzy_levenshtein), the in-plan sorted-array pair generation
-# (events_cooccurrence_lift), and the two memoized-asset dedup paths
-# (dedup_substring_contained — substring_reps + SHJ hint;
-# text_decontaminate — decontam_bench_shingles blocklist).  All eight
-# passed tools/oracle_check.py at sf0.01 during round 15; this block
-# makes the driver's DuckDB oracle the ground truth for the rewritten
-# code, as the invariant requires.
-#
-# The nine entries after text_decontaminate are the round-16 rewrites:
-# the vectorized batch tokenizer (VERDICT r15 item 7 —
-# functions/text.py _token_hash_flat/_shingle_flat, a flat numpy core
-# with deferred modulo; property-tested bit-identical to the scalar
-# replay) rebuilt the internals of minhash_sig_pandas, simhash_pandas,
-# shingle_hashes_pandas, shingle_hashes_wide_pandas,
-# token_hashes_pandas and dsir_score_pandas, so every entry whose
-# signature/gram/token pass runs through them is re-fronted: the
-# minhash family (lsh, verified, index_materialized, incremental),
-# dedup_simhash, dedup_multi_signal, the span-dedup pair (wide chain),
-# and ml_naive_bayes_langid (token-hash features).  All verified
-# locally at sf0.01 before fronting (oracle_check.py).
-#
-# dedup_semdedup (18th) is the second round-16 rewrite: the
-# semdedup_dropped pair miner moved from the shuffle_merge self-join
-# (interpreted 64-term fold per pair row) to a grouped-map GEMM
-# kernel with exact-fold band recompute (dedup._sem_mine_group_pdf;
-# decisions bit-identical by construction — property-tested in
-# tests/test_properties.py, exact 41,415-rep set equality vs the old
-# join verified at the pipeline_scale corpus, oracle-verified at
-# sf0.001 + sf0.01 before fronting).
-_R16_RECHECK: tuple[str, ...] = (
+# The driver's correctness gate grades exactly the first 50 entries of
+# collect(), in this order.  Rotation rule: entries rewritten (or added)
+# since their last green driver row go first, then the entries whose
+# latest green CORRECTNESS_r*.json row is oldest, alphabetical within a
+# round.  Next staleness candidates (all last green in round 10):
+# agg_percentiles, agg_pivot, agg_rollup, agg_salted_skew, agg_simple,
+# agg_sorted_key, agg_stats_library, agg_string_listagg, avg_rewrite,
+# count_distinct.
+GATE: tuple[str, ...] = (
     "ml_knn_eval",
     "ml_knn_eval_ivf",
     "text_dsir_importance",
@@ -853,25 +103,6 @@ _R16_RECHECK: tuple[str, ...] = (
     "dedup_span_removal",
     "ml_naive_bayes_langid",
     "dedup_semdedup",
-)
-
-# Round-16 staleness rotation: the 2 round-9 rows displaced from the
-# bounded r15 gate (events_user_daily, events_windowed_topk —
-# documented at _R15_GATE) first, then the remaining 23 round-9 rows
-# (the ≤8-round policy edge NOW), then the 7 oldest round-10 rows
-# (alphabetical within round — the same total order every rotation has
-# used; computed by unioning CORRECTNESS_r1..r15, latest hash-green
-# round per entry).  2 + 23 + 7 = 32; with the 18-entry recheck block
-# above the bounded 50-slot gate is exactly filled.  The 10 next
-# staleness candidates (agg_percentiles — displaced late-r16 when the
-# semdedup rewrite entered the recheck block — then agg_pivot,
-# agg_rollup, agg_salted_skew, agg_simple, agg_sorted_key,
-# agg_stats_library, agg_string_listagg, avg_rewrite, count_distinct,
-# all round 10) head the round-17 rotation, the same
-# explicitly-tracked displacement discipline as r11-r15.  After this
-# gate runs, no registry entry's latest driver row is older than
-# round 10.
-_R16_GATE: tuple[str, ...] = (
     "events_user_daily",
     "events_windowed_topk",
     "mix_source_weights",
@@ -905,225 +136,18 @@ _R16_GATE: tuple[str, ...] = (
     "agg_having",
     "agg_min_max_types",
 )
-
-# Round-15 recheck (standing provenance invariant: any rewrite or new
-# entry is fronted into the SAME round's gate).  The span-dedup pair
-# moved to the WIDE 60-bit gram key (two independent polynomial
-# chains, injectively combined — dedup.py _gram_stream): the round-15
-# fully-duplicated-corpus probe measured the single ~2^30 hash
-# false-flagging 19% -> 72% of known-unique docs across the 92M ->
-# 742M-gram series (SCALE.md round-15), and these two entries EDIT
-# text on gram-key equality, so the collision rate is a correctness
-# defect, not sketch noise.  Both oracles replay the wide arithmetic;
-# both re-verified locally at sf0.001 + sf0.01 (2 pass, 0 fail)
-# before fronting.  (The other candidate, dedup_minhash_lsh's r14
-# bench drift, was adjudicated to box noise with untouched-code
-# controls — no rewrite, not fronted.)
-_R15_RECHECK: tuple[str, ...] = (
-    "dedup_duplicate_ngram_spans",
-    "dedup_span_removal",
-)
-
-# Round-15 staleness rotation (VERDICT r14 item 3): the 5 setop rows
-# displaced from the bounded r14 gate (documented below at _R14_GATE)
-# first, then the 13 remaining round-7 rows (the subquery_* family, the
-# window_* frame family, setop_union_distinct — at the ≤8-round policy
-# edge NOW), then all 18 round-8 rows (DDL/copy/catalog/streaming
-# built-ins — the r8 cohort in full), then the 14 oldest round-9 rows
-# (alphabetical within round — the same total order every rotation has
-# used; computed by unioning CORRECTNESS_r1..r14, latest hash-green
-# round per entry).  5 + 13 + 18 + 14 = 50; with the 2-entry recheck
-# block above, the bounded 50-slot gate keeps the first 48 of the 50
-# names below — the last 2 (events_user_daily, events_windowed_topk)
-# slip to the head of the round-16 rotation, the same explicitly-
-# tracked displacement discipline as r11-r14.  After this gate runs,
-# no registry entry's latest driver row is older than round 9 except
-# those two displaced r9 rows.
-_R15_GATE: tuple[str, ...] = (
-    "setop_except",
-    "setop_except_all",
-    "setop_intersect",
-    "setop_intersect_all",
-    "setop_union_all",
-    "setop_union_distinct",
-    "subquery_correlated_scalar",
-    "subquery_cte",
-    "subquery_exists_correlated",
-    "subquery_in_select",
-    "subquery_not_exists",
-    "subquery_scalar",
-    "subquery_scalar_in_select",
-    "window_ntile",
-    "window_percent_rank_cume",
-    "window_range_frame",
-    "window_rows_sliding_frame",
-    "window_value_functions",
-    "agg_count_min_sketch",
-    "analyze_query_stats",
-    "catalog_pg_attribute",
-    "catalog_pg_tables",
-    "copy_parquet_codecs",
-    "copy_partitioned_parquet",
-    "copy_roundtrip_csv",
-    "copy_roundtrip_json",
-    "copy_roundtrip_orc",
-    "ddl_create_index",
-    "ddl_create_insert_delete",
-    "ddl_create_view",
-    "ddl_sql_udf",
-    "explain_plan_props",
-    "pragma_session_vars",
-    "source_tbl_roundtrip",
-    "streaming_dedup_keys",
-    "streaming_tumbling_counts",
-    "agg_weighted_median",
-    "dedup_containment",
-    "events_anomaly_zscore",
-    "events_asof_nearest",
-    "events_ewma_user",
-    "events_funnel",
-    "events_hourly_gapfill",
-    "events_json_props",
-    "events_ohlc_bars",
-    "events_retention_cohorts",
-    "events_sliding_window",
-    "events_time_rollup",
-    "events_user_daily",
-    "events_windowed_topk",
-)
-
-# Round-14 recheck (standing provenance invariant: any rewrite or new
-# entry is fronted into the SAME round's gate).  dedup_span_removal:
-# NEW (registry 313) — span REMOVAL on the corpus-repeated ngram
-# signal (VERDICT r13 item 4), sharing the memoized ngram_dup_index
-# asset with the signal entry.  mix_doremi_weight_update +
-# text_unigram_logprob: the round-14 advice fix unified their
-# content-identical unigram-LM assets under the single cache kind
-# 'unigram_lm_freq' (shared _unigram_freq_cached helper) — plan
-# semantics unchanged, but both operators' code moved, so both are
-# re-fronted.  mix_epochs_schedule: NEW (registry 314) — data-
-# constrained repeat-epoch budget allocation (Muennighoff et al. 2023
-# water-filling over decayed per-epoch value), the principled upgrade
-# of mix_source_weights' flat 4-epoch cap; oracle-green at sf0.001/
-# 0.01/0.1 (pure-integer ranking key, no cross-engine pow()).
-# ml_naive_bayes_langid: the collapsed feature bag became a memoized
-# asset (was a PER-CALL lazy local checkpoint — the scratch-write
-# class; steady state 1.47 -> 0.81 s, zero corpus scans on repeat
-# calls) — rewritten, so re-fronted.
-_R14_RECHECK: tuple[str, ...] = (
-    "dedup_span_removal",
-    "mix_epochs_schedule",
-    "mix_doremi_weight_update",
-    "text_unigram_logprob",
-    "ml_naive_bayes_langid",
-)
-
-# Round-14 staleness rotation (VERDICT r13 item 3): the 15 entries
-# whose latest driver row is still round 5 (the ≤8-round policy edge
-# NOW) followed by the 35 oldest round-7 rows (alphabetical within
-# round — the same total order every rotation has used; computed by
-# unioning CORRECTNESS_r1..r13, latest hash-green round per entry).
-# With the 5-entry recheck block above, the bounded 50-slot gate keeps
-# the first 45 of the 50 names below; the last 5 — setop_except,
-# setop_except_all, setop_intersect, setop_intersect_all,
-# setop_union_all — slip to the
-# head of the round-15 rotation alongside the 13 remaining r7 rows
-# (setop_union_distinct, the subquery_* family, the window_* frame
-# family), the same explicitly-tracked displacement discipline as
-# r11/r12/r13.
-_R14_GATE: tuple[str, ...] = (
-    "pairs_contrastive_mining",
-    "pipeline_data_quality",
-    "pipeline_drop_reasons",
-    "search_hybrid_rrf",
-    "streaming_transform_with_state",
-    "subquery_any_all_rewrite",
-    "text_bpe_encode",
-    "text_bpe_train",
-    "text_langid_eval",
-    "text_mlm_masking",
-    "text_token_entropy",
-    "unnest_with_ordinality",
-    "vector_pca_power_iteration",
-    "vector_pq_encode",
-    "window_exclude_current",
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    "agg_heavy_hitters_sketch",
-    "agg_incremental_merge",
-    "agg_sketch_mergeable",
-    "ann_filtered_topk",
-    "dedup_cluster_keep_best",
-    "events_attribution_last_touch",
-    "explain_cost_estimates",
-    "expr_array_library",
-    "expr_bitwise_ops",
-    "expr_boolean_3vl",
-    "expr_case_if",
-    "expr_cast_matrix",
-    "expr_datetime_library",
-    "expr_div_by_zero",
-    "expr_extract_date",
-    "expr_hash_json_library",
-    "expr_in_between_like",
-    "expr_interval_arith",
-    "expr_math_library",
-    "expr_null_checks",
-    "expr_regexp_library",
-    "expr_string_funcs",
-    "expr_string_library",
-    "expr_typed_literals",
-    "join_dpp_partition_pruned",
-    "join_salted_skew",
-    "pack_greedy_bins",
-    "sample_hash_stratified",
-    "setop_except",
-    "setop_except_all",
-    "setop_intersect",
-    "setop_intersect_all",
-    "setop_union_all",
-)
-
-_PRIORITY: tuple[str, ...] = tuple(
-    dict.fromkeys(
-        (
-            *_R16_RECHECK,
-            *_R16_GATE,
-            *_R15_RECHECK,
-            *_R15_GATE,
-            *_R14_RECHECK,
-            *_R14_GATE,
-            *_R13_RECHECK,
-            *_R13_GATE,
-            *_R12_RECHECK,
-            *_R12_GATE,
-            *_R11_RECHECK,
-            *_R11_NEW,
-            *_R11_GATE,
-            *_R10_RECHECK,
-            *_R10_GATE,
-            *_R9_TAIL,
-            *_R9_RECHECK,
-            *_R7_QUEUE,
-            *_R6_GATE,
-            *_R5_GATE,
-            *_R4_GATE,
-            *_R3_VERIFIED,
-        )
-    )
-)
-assert len(set(_PRIORITY)) == len(_PRIORITY)
 
 
 def collect() -> dict[str, QueryEntry]:
     """Import all operator modules (which self-register) and return the
-    full registry, priority entries first (see _PRIORITY)."""
+    full registry: GATE entries first, then the rest in registration
+    order."""
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
-    missing = [n for n in _PRIORITY if n not in REGISTRY]
+    missing = [n for n in GATE if n not in REGISTRY]
     if missing:
-        raise KeyError(f"_PRIORITY names not registered: {missing}")
-    ordered = {n: REGISTRY[n] for n in _PRIORITY}
+        raise KeyError(f"GATE names not registered: {missing}")
+    ordered = {n: REGISTRY[n] for n in GATE}
     ordered.update((n, e) for n, e in REGISTRY.items() if n not in ordered)
     return ordered
 

@@ -27,6 +27,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _append_pythonpath(path: str) -> None:
+    pp = os.environ.get("PYTHONPATH", "")
+    if path not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = f"{pp}{os.pathsep}{path}" if pp else path
+
+
 def get_spark(
     app_name: str = "risinglight_spark",
     master: str | None = None,
@@ -36,13 +42,16 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
 
-    # Python WORKERS must also see the vendored google.protobuf
-    # fallback (transformWithStateInPandas state clients import it in
-    # the worker process, where the pickled-by-value processor never
-    # triggers a risinglight_spark import).  Workers inherit
-    # PYTHONPATH through the JVM, so extend it before the JVM starts;
-    # appended, so a real protobuf installation still wins.
+    # Python WORKERS import this package to run its UDFs, whatever the
+    # cwd, and must also see the vendored google.protobuf fallback
+    # (transformWithStateInPandas state clients import it in the worker
+    # process, where the pickled-by-value processor never triggers a
+    # risinglight_spark import).  Workers inherit PYTHONPATH through
+    # the JVM, so extend it before the JVM starts; appended, so an
+    # existing entry (or a real protobuf installation) still wins.
     import importlib.util
+
+    _append_pythonpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
     vendor = os.path.join(os.path.dirname(__file__), "_vendor")
     try:
@@ -54,11 +63,7 @@ def get_spark(
     # put _vendor on this process's sys.path, which workers do not
     # inherit — only PYTHONPATH reaches them).
     if _spec is None or (_spec.origin or "").startswith(vendor):
-        pp = os.environ.get("PYTHONPATH", "")
-        if vendor not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                f"{pp}{os.pathsep}{vendor}" if pp else vendor
-            )
+        _append_pythonpath(vendor)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 32)
 

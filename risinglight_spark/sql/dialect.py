@@ -675,10 +675,28 @@ def fmt_column(col, dtype):
 
         conv = ArrowTableToRowsConversion._create_converter(dtype)
         text = pa.array(
-            [None if v is None else fmt_value(v) for v in map(conv, col.to_pylist())],
+            [None if v is None else fmt_value(_eng_decimals(v))
+             for v in map(conv, col.to_pylist())],
             pa.large_string(),
         )
     return text.cast(pa.large_string())
+
+
+def _eng_decimals(v):
+    """``v`` with every Decimal inside it replaced by the Decimal parsed
+    from its engineering string — what a collected Row holds (see the
+    decimal branch of ``fmt_column``); idempotent."""
+    from pyspark.sql import Row
+
+    if isinstance(v, decimal.Decimal):
+        return decimal.Decimal(v.to_eng_string())
+    if isinstance(v, Row):
+        return Row(*v.__fields__)(*map(_eng_decimals, v))
+    if isinstance(v, list):
+        return [_eng_decimals(x) for x in v]
+    if isinstance(v, dict):
+        return {_eng_decimals(k): _eng_decimals(x) for k, x in v.items()}
+    return v
 
 
 def _cells_match(got: str, want: str) -> bool:

@@ -296,6 +296,11 @@ _TYPE_QUERIES = {
               "map('k', 1), parse_json('{\"a\": [1, 2.5, null]}'), "
               "INTERVAL '1 2:03:04' DAY TO SECOND), "
               "(NULL, NULL, NULL, NULL) AS t(a, b, c, d)",
+    "nested_small_decimals": "SELECT array(v, 0.5BD) AS a, "
+                             "named_struct('x', v, 'y', array(v)) AS s, "
+                             "map('k', v) AS m FROM VALUES "
+                             "(CAST(1E-10 AS DECIMAL(20,10))), "
+                             "(CAST(-1.2E-9 AS DECIMAL(20,10))) AS t(v)",
     "zero_rows": "SELECT 1 AS a, 'x' AS b, 1.5D AS c WHERE false",
 }
 
