@@ -9,6 +9,9 @@ Implemented as ``F.zip_with`` / ``F.aggregate`` higher-order functions:
 these execute JVM-side inside whole-stage codegen (no Python round
 trip), so a brute-force scan over billions of embeddings stays a single
 codegen'd stage that parallelizes linearly with partitions.
+
+``fold_sqdist`` / ``fold_dot`` are the numpy form of the same folds, for
+collected assets and Arrow batches; they return the same doubles.
 """
 
 from __future__ import annotations
@@ -67,31 +70,48 @@ def sql_list_literal(values: list[float]) -> str:
     return "[" + ", ".join(repr(float(v)) for v in values) + "]"
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Flat codegen chain for ``dot`` (0.0 + a1*b1 + ...): bit-identical
-    to the zip_with/aggregate fold (same left-associated order).
+# Scratch cap, in float64 elements (x8 bytes, ~128 MB), for one row
+# block of a numpy caller's cross matrix (the GEMM bounds of the kNN and
+# semdedup kernels): callers size blocks as SCRATCH_ELEMS // columns.
+# Read as ``vector.SCRATCH_ELEMS`` at call time, so a test can shrink it.
+SCRATCH_ELEMS = 16_000_000
 
-    Measured warning (round 4): at dim=64 this is ~3x SLOWER than the
-    interpreted fold in a pair join (dedup_semdedup 3.8 s -> 11.2 s at
-    sf0.1) — 128 element_at calls per row explode the codegen
-    expression tree past what JIT handles well, while the fold is one
-    tight interpreted loop over a primitive array.  Only consider it
-    for small dims (<= ~8) where the chain stays inside one codegen
-    method."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.element_at(a, i + 1).cast("double") * F.element_at(
-            b, i + 1
-        ).cast("double")
+
+def fold_sqdist(a, b, rows=None, cols=None):
+    """Squared L2 distances as the float64 left fold of ``l2_distance``
+    and the oracles' ``sqrt(0.0 + d0*d0 + d1*d1 + ...)``: one IEEE
+    rounding per op in index order, so ``np.sqrt`` of the result is
+    bit-identical to both engines.  ``a`` (n, dim) and ``b`` (m, dim)
+    widen to float64.  Without ``rows``/``cols`` the result is the (n, m)
+    cross matrix; with them it is one value per pair
+    ``(a[rows[p]], b[cols[p]])``, never gathering (pairs, dim) blocks."""
+    return _fold(a, b, rows, cols, square=True)
+
+
+def fold_dot(a, b, rows=None, cols=None):
+    """Dot products as the left fold of ``dot`` (0.0 + a0*b0 + ...);
+    same forms as ``fold_sqdist``."""
+    return _fold(a, b, rows, cols, square=False)
+
+
+def _fold(a, b, rows, cols, square):
+    import numpy as np
+
+    op = np.subtract if square else np.multiply
+    # column-major copies: each step reads one contiguous dimension
+    at = np.asarray(a, dtype=np.float64).T.copy()
+    bt = np.asarray(b, dtype=np.float64).T.copy()
+    if rows is None:
+        acc = np.zeros((at.shape[1], bt.shape[1]))
+    else:
+        acc = np.zeros(len(rows))
+    t = np.empty_like(acc)
+    for ad, bd in zip(at, bt, strict=True):
+        if rows is None:
+            op(ad[:, None], bd, out=t)
+        else:
+            op(ad[rows], bd[cols], out=t)
+        if square:
+            np.multiply(t, t, out=t)
+        acc += t
     return acc
-
-
-def l2_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Flat codegen chain for ``l2_distance`` (sqrt(0.0 + (a1-b1)^2 + ...))."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        d = F.element_at(a, i + 1).cast("double") - F.element_at(
-            b, i + 1
-        ).cast("double")
-        acc = acc + d * d
-    return F.sqrt(acc)

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from risinglight_spark.functions import text as T
+from risinglight_spark.functions import vector as V
 from risinglight_spark.functions.vector import dot, lit_vector, norm
 from risinglight_spark.operators import Tables
 from risinglight_spark.operators.vector_search import PLANES
@@ -1371,10 +1372,6 @@ SEM_MAX_CELL = 1024
 # orders of margin, same tolerance discipline as the kNN GEMM
 # prefilter (pipeline_ops._knn_local_topk).
 _SEM_COS_BAND = 1e-9
-# row-block cap for the per-group GEMM: block_rows * m <= this many
-# float64 elements (~128 MB scratch), so a skew-inflated sub-cell can
-# never balloon one task's cosine matrix.
-_SEM_GEMM_CHUNK = 16_000_000
 
 
 def _sem_mine_group_pdf(pdf):
@@ -1387,7 +1384,7 @@ def _sem_mine_group_pdf(pdf):
     Two-phase exactness (see mine_dropped's comment): a row-blocked
     GEMM bounds every pair decision; pairs inside the fp-safety band
     of the threshold (or with non-finite GEMM cosine — NaN embeddings,
-    zero norms) are recomputed with the canonical per-dimension fold,
+    zero norms) are recomputed with the exact fold (vector.fold_dot),
     so the returned set is bit-identical to the former pair join's."""
     import numpy as np
     import pandas as pd
@@ -1404,10 +1401,9 @@ def _sem_mine_group_pdf(pdf):
         ]
     )
     nrm = pdf["nrm"].to_numpy(dtype=np.float64)[order]
-    dim = emb.shape[1]
     dropped = np.zeros(m, dtype=bool)
     cols = np.arange(m)
-    block = max(1, _SEM_GEMM_CHUNK // m)
+    block = max(1, V.SCRATCH_ELEMS // m)
     for lo in range(0, m - 1, block):
         hi = min(lo + block, m)
         g = emb[lo:hi] @ emb.T  # (hi-lo, m) GEMM dot products
@@ -1420,10 +1416,7 @@ def _sem_mine_group_pdf(pdf):
         ) & ~sure & upper
         ri, ci = np.nonzero(unc)
         if len(ri):
-            prod = emb[lo + ri] * emb[ci]
-            acc = np.zeros(len(ri), dtype=np.float64)
-            for d in range(dim):  # exact left fold: ((0.0 + p0) + p1)...
-                acc = acc + prod[:, d]
+            acc = V.fold_dot(emb, emb, lo + ri, ci)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cosf = acc / (nrm[lo + ri] * nrm[ci])
             dropped[ci[cosf >= SEM_TAU]] = True
@@ -1618,12 +1611,10 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # `dot(a,b)/(a.nrm*b.nrm) >= SEM_TAU` filter: GEMM cosines only
         # BOUND the decision — pairs within the fp-safety band of the
         # threshold (1e-9 vs ~1e-13 worst-case GEMM-vs-fold error for
-        # dim=64, plus every non-finite value) are recomputed with the
-        # canonical per-dimension left fold (0.0 + a1*b1 + ... — the
-        # exact IEEE sequence of functions/vector.dot and both
-        # oracles), and only those exact values decide in-band pairs;
-        # out-of-band pairs provably fall on the same side of the
-        # threshold either way.  Zero-norm rows divide 0.0/0.0 -> NaN
+        # dim=64, plus every non-finite value) are recomputed with
+        # functions/vector.fold_dot, and only those exact values decide
+        # in-band pairs; out-of-band pairs provably fall on the same side
+        # of the threshold either way.  Zero-norm rows divide 0.0/0.0 -> NaN
         # -> never dropped, exactly the SQL comparison semantics
         # (property-tested against a scalar replay of the join in
         # tests/test_properties.py).

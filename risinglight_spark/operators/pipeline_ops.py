@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from risinglight_spark.functions import text as T
+from risinglight_spark.functions import vector as V
 from risinglight_spark.operators import Tables, fpsum, fpsum_sql
 from risinglight_spark.operators.dedup import (
     _jaccard_oracle,
@@ -2057,7 +2058,6 @@ def _knn_local_topk(
     test_ids,
     test_emb,
     test_labels,
-    dim: int,
     k: int,
     probe_cells: "dict | None" = None,
 ) -> DataFrame:
@@ -2082,12 +2082,10 @@ def _knn_local_topk(
     cap parallelism at the cell count) and no broadcast-join blowup.
 
     Bit-exactness with the DuckDB oracle: embeddings widen
-    float32 -> float64 first (exact, = CAST(x AS DOUBLE)), then the
-    distance accumulates per-dimension in index order — the same
-    IEEE-754 left fold as the oracle's ``sqrt(0.0 + d0*d0 + d1*d1 +
-    ...)``, l2_unrolled, and the zip_with/aggregate fold: one rounding
-    per op in the same sequence, so distances (and therefore
-    tie-ranks) are bit-identical doubles.
+    float32 -> float64 first (exact, = CAST(x AS DOUBLE)), then every
+    emitted distance is ``sqrt`` of functions/vector.fold_sqdist — the
+    oracle's own IEEE sequence — so distances (and therefore tie-ranks)
+    are bit-identical doubles.
     """
     import numpy as np
     import pandas as pd
@@ -2096,25 +2094,21 @@ def _knn_local_topk(
     temb = np.asarray(test_emb, dtype=np.float64)
     tlab = np.asarray(test_labels, dtype=np.int64)
 
-    # Cap the tests-x-rows scratch matrix per GEMM call (elements, i.e.
-    # x8 bytes): big enough to amortize the BLAS call, small enough that
-    # 32 concurrent tasks never pressure executor memory.
-    _CHUNK_ELEMS = 16_000_000
-
     def score_group(out, cemb, tid, lab, tsel):
         """Exact local top-k in two phases (r15, guide §4.2): a GEMM
         computes approximate squared distances (||t||² - 2t·c + ||c||²,
         cache-blocked BLAS — ~10x less memory traffic than the former
         64-pass accumulator loop), which only BOUND the candidate set:
         per test, every row within fp-safety tolerance of its kk-th
-        smallest approximate value.  The canonical per-dimension
-        left-fold distance (bit-identical to the oracle's sqrt(0.0 +
-        d0*d0 + ...)) is then recomputed on candidates only — ~kk per
-        test instead of m — and ONLY those exact values are ranked or
-        emitted, so results match the one-phase form bit-for-bit.  The
-        tolerance (1e-9 of the magnitude scale, vs ~1e-14 accumulated
-        fp error for dim=64) can only widen the candidate set, never
-        drop a true (dist, train_id) winner.  The former per-test
+        smallest approximate value, NaN ranked as +inf (a test with
+        fewer than kk non-NaN distances keeps every row, NaN-last like
+        Spark and DuckDB).  The exact distance (vector.fold_sqdist) is
+        then recomputed on candidates only — ~kk per test instead of
+        m — and ONLY those exact values are ranked or emitted, so
+        results match the one-phase form bit-for-bit.  The tolerance
+        (1e-9 of the magnitude scale, vs ~1e-14 accumulated fp error
+        for dim=64) can only widen the candidate set, never drop a
+        true (dist, train_id) winner.  The former per-test
         Python loop (argpartition per column) is replaced by one
         argpartition along contiguous rows plus a single global
         lexsort + groupwise rank filter."""
@@ -2122,9 +2116,9 @@ def _knn_local_topk(
         tsel = np.asarray(tsel, dtype=np.int64)
         kk = min(k, m)
         cn2 = np.einsum("ij,ij->i", cemb, cemb)
-        cn2max = cn2.max() if m else 0.0
+        cn2max = np.max(cn2, initial=0.0, where=~np.isnan(cn2))
         neg2ct = cemb.T * -2.0
-        chunk = max(1, _CHUNK_ELEMS // max(m, 1))
+        chunk = max(1, V.SCRATCH_ELEMS // max(m, 1))
         for lo in range(0, len(tsel), chunk):
             tsel_c = tsel[lo : lo + chunk]
             tsub = temb[tsel_c]
@@ -2136,33 +2130,17 @@ def _knn_local_topk(
             if m > kk:
                 part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
                 bound = np.take_along_axis(d2, part, axis=1).max(axis=1)
+                # argpartition puts NaN last, so a NaN bound means fewer
+                # than kk non-NaN rows: that test keeps every row
+                full = np.isnan(bound)[:, None]
                 tol = 1e-9 * (tn2 + cn2max + 1.0)
-                rows, colm = np.nonzero(d2 <= (bound + tol)[:, None])
+                rows, colm = np.nonzero((d2 <= (bound + tol)[:, None]) | full)
             else:
                 rows = np.repeat(np.arange(t_n), m)
                 colm = np.tile(np.arange(m), t_n)
-            # exact left-fold on candidates only — same IEEE sequence
-            # as before; ranking and emitted dists use ONLY these.
-            # r16 (ADVICE r15): the (candidates, dim) diffs matrix is
-            # computed in sub-chunks of <= _CHUNK_ELEMS elements so
-            # peak scratch stays ~128 MB even when tie-dense data
-            # (duplicate embeddings) makes nonzero() return up to
-            # t_n*m candidate rows — previously diffs alone could
-            # reach _CHUNK_ELEMS*dim*8 bytes (~8 GB at dim=64).  Each
-            # row's per-dimension fold is unchanged (rows are
-            # independent), so distances stay bit-identical.
-            n_cand = len(rows)
-            dist = np.empty(n_cand, dtype=np.float64)
-            sub = max(1, _CHUNK_ELEMS // max(dim, 1))
-            for clo in range(0, n_cand, sub):
-                r_s = rows[clo : clo + sub]
-                c_s = colm[clo : clo + sub]
-                diffs = tsub[r_s] - cemb[c_s]
-                acc = np.zeros(len(r_s), dtype=np.float64)
-                for i in range(dim):
-                    d = diffs[:, i]
-                    acc += d * d
-                dist[clo : clo + sub] = np.sqrt(acc)
+            # ranking and emitted dists use ONLY the exact values; the
+            # paired fold's scratch is O(candidates), not O(cand * dim)
+            dist = np.sqrt(V.fold_sqdist(tsub, cemb, rows, colm))
             order = np.lexsort((tid[colm], dist, rows))
             rows_s = rows[order]
             starts = np.searchsorted(rows_s, np.arange(t_n))
@@ -2244,8 +2222,6 @@ def _knn_local_topk(
     "(same float64 left fold), so the ranking is too.",
 )
 def ml_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from risinglight_spark.operators.vector_search import DIM
-
     t = Tables(spark, sf_dir)
     emb = t.embeddings
     # The bounded eval batch (same payload the broadcast variant ships
@@ -2275,7 +2251,6 @@ def ml_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         test_pdf["vec_id"].to_numpy(),
         np.stack(test_pdf["embedding"].to_numpy()),
         test_pdf["label"].to_numpy(),
-        DIM,
         KNN_K,
     )
     w = Window.partitionBy("test_id").orderBy("dist", "train_id")
@@ -2477,18 +2452,14 @@ def ml_knn_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Probe assignment runs where both operands already live: the test
     # batch (bounded) against the centroid asset (driver-sized by
     # construction — it IS the broadcast table in every other IVF op).
-    # Same float64 left fold as the oracle's sqrt(0.0 + ...) chain, so
+    # vector.fold_sqdist is the oracle's sqrt(0.0 + ...) chain, so
     # probed cells match bit-exactly; ties order by (dist, cell).
     cents_pdf = ivf_centroids_cached(spark, sf_dir).toPandas()
     cell_ids = cents_pdf["cell"].to_numpy()
     cmat = cents_pdf[[f"c{i}" for i in range(DIM)]].to_numpy(
         dtype=np.float64
     )
-    cd = np.zeros((temb64.shape[0], cmat.shape[0]), dtype=np.float64)
-    for i in range(DIM):
-        diff = temb64[:, i : i + 1] - cmat[:, i]
-        cd += diff * diff
-    cd = np.sqrt(cd)
+    cd = np.sqrt(V.fold_sqdist(temb64, cmat))
     probe_cells: dict[int, list] = {}
     nprobe = min(KNN_NPROBE, cmat.shape[0])
     for j in range(temb64.shape[0]):
@@ -2508,7 +2479,6 @@ def ml_knn_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         test_ids,
         temb64,
         test_labels,
-        DIM,
         KNN_K,
         probe_cells=probe_cells,
     )
@@ -2551,7 +2521,6 @@ def ml_knn_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 test_ids[audit_mask],
                 temb64[audit_mask],
                 test_labels[audit_mask],
-                DIM,
                 KNN_K,
             )
             .withColumn("rn", F.row_number().over(we))

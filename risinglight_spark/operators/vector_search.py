@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from risinglight_spark.functions.vector import (
     cosine_distance,
     dot,
+    fold_sqdist,
     l2_distance,
     lit_vector,
     neg_inner_product,
@@ -1519,9 +1520,9 @@ def _pq_query_lut(spark: SparkSession, sf_dir: str, cb) -> DataFrame:
     construction — it IS the broadcast table): a per-call PQ_SUB-arm
     unionAll plan over the codebook spent more on planning/codegen
     than the 2.5k-row arithmetic is worth, and FAISS computes this
-    table on the query host for the same reason.  Same float64 left
-    fold as the expression form (0.0 + d0*d0 + ...), so d2q is
-    bit-identical.  Session-memoized like the codebook it derives
+    table on the query host for the same reason.  fold_sqdist is the
+    expression form's IEEE sequence, so d2q is bit-identical.
+    Session-memoized like the codebook it derives
     from (the query vector is a fixed constant here; a real serving
     path computes one per query on the host, FAISS-style)."""
     from risinglight_spark.operators import _cached_persisted
@@ -1537,18 +1538,12 @@ def _pq_query_lut_build(cb) -> DataFrame:
 
     cb_pdf = cb.toPandas()
     codes = cb_pdf["code"].to_numpy()
+    cmat = cb_pdf[[f"c{i}" for i in range(DIM)]].to_numpy(dtype=np.float64)
     rows = []
     for s in range(PQ_SUB):
-        acc = np.zeros(len(cb_pdf), dtype=np.float64)
-        for d in range(PQ_SDIM):
-            i = s * PQ_SDIM + d
-            diff = QUERY_VEC[i] - cb_pdf[f"c{i}"].to_numpy(
-                dtype=np.float64
-            )
-            acc = acc + diff * diff
-        rows.append(
-            pd.DataFrame({"s": s, "code": codes, "d2q": acc})
-        )
+        sub = slice(s * PQ_SDIM, (s + 1) * PQ_SDIM)
+        d2q = fold_sqdist([QUERY_VEC[sub]], cmat[:, sub])[0]
+        rows.append(pd.DataFrame({"s": s, "code": codes, "d2q": d2q}))
     return cb.sparkSession.createDataFrame(
         pd.concat(rows, ignore_index=True),
         schema="s INT, code INT, d2q DOUBLE",
@@ -1733,9 +1728,8 @@ def _ivf_argmin_assign(
     doubles — the same object every IVF probe already collects), so
     the assignment is one zero-shuffle Arrow map: numpy computes the
     distances per batch and argmins row-wise.  BIT-EXACT with the SQL
-    formulation and the DuckDB oracles: the accumulation runs per-dim
-    left-to-right in float64 (acc += (e_i - c_i)^2), exactly the
-    l2_distance left fold / the oracle's `0.0 + t0 + t1 + ...` chain;
+    formulation and the DuckDB oracles: distances are
+    functions/vector.fold_sqdist, the oracle's own IEEE sequence;
     sqrt is applied (argmin over squared distances could MERGE ties
     that sqrt rounding creates); centroids are sorted ascending so
     numpy's first-minimum argmin IS the (d, cell) tie-break.  At 100
@@ -1780,7 +1774,6 @@ def _ivf_argmin_assign(
 
         c = mat_arr  # (C, D)
         cid = cid_arr
-        n_dim = c.shape[1]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1792,11 +1785,7 @@ def _ivf_argmin_assign(
             # sub-blocks bound the (B, C) distance frame in memory
             for lo in range(0, len(pdf), 2048):
                 eb = e[lo : lo + 2048]
-                acc = np.zeros((eb.shape[0], c.shape[0]))
-                for i in range(n_dim):  # left-to-right, like the fold
-                    diff = eb[:, i, None] - c[None, :, i]
-                    acc += diff * diff
-                d = np.sqrt(acc)
+                d = np.sqrt(fold_sqdist(eb, c))
                 # SQL sorts NaN distances GREATER than every double
                 # (both engines), so a NaN cell must lose to any
                 # finite one; numpy argmin would instead surface NaN.
@@ -1883,21 +1872,16 @@ def ann_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe + ADC scan.
     # Probe selection runs driver-side over the cached centroid asset
     # (cells x DIM doubles — driver-sized by construction; it IS the
-    # broadcast table everywhere else): same float64 left fold as the
-    # oracle's sqrt(0.0 + ...) chain, ties on (qd, cell), so the probed
-    # cell matches bit-exactly while saving the tiny orderBy-limit job
-    # plus its broadcast round-trip per query.
+    # broadcast table everywhere else): fold_sqdist, ties on (qd, cell),
+    # so the probed cell matches the oracle bit-exactly while saving the
+    # tiny orderBy-limit job plus its broadcast round-trip per query.
     import numpy as np
 
     cents_pdf = ivf_centroids_cached(spark, sf_dir).toPandas()
     cmat = cents_pdf[[f"c{i}" for i in range(DIM)]].to_numpy(
         dtype=np.float64
     )
-    qd = np.zeros(cmat.shape[0], dtype=np.float64)
-    for i in range(DIM):
-        d = cmat[:, i] - QUERY_VEC[i]
-        qd += d * d
-    qd = np.sqrt(qd)
+    qd = np.sqrt(fold_sqdist([QUERY_VEC], cmat)[0])
     cell_ids = cents_pdf["cell"].to_numpy()
     probe_cell = int(cell_ids[np.lexsort((cell_ids, qd))[0]])
 
@@ -2536,18 +2520,20 @@ def ann_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in _cell_maxrad_cached(spark, sf_dir).collect()
     }
     # driver-side survivor decision from the two bounded assets: plain
-    # left-to-right float64 fold for d(q, centroid) — pruning needs
+    # fold_sqdist for d(q, centroid) — pruning needs
     # only the slack guarantee, not bit-exactness
+    import numpy as np
+
+    cents_pdf = cents.toPandas()
+    cmat = cents_pdf[[f"c{i}" for i in range(DIM)]].to_numpy(
+        dtype=np.float64
+    )
+    dq = np.sqrt(fold_sqdist([QUERY_VEC], cmat)[0])
     survivors = []
-    for r in cents.collect():
-        acc = 0.0
-        for i in range(DIM):
-            diff = float(r[f"c{i}"]) - QUERY_VEC[i]
-            acc += diff * diff
-        dq = math.sqrt(acc)
-        mr = maxrad.get(r["cell"])
-        if mr is not None and dq - mr <= RANGE_EPS + _RANGE_PRUNE_SLACK:
-            survivors.append(r["cell"])
+    for cell, d in zip(cents_pdf["cell"].tolist(), dq.tolist()):
+        mr = maxrad.get(cell)
+        if mr is not None and d - mr <= RANGE_EPS + _RANGE_PRUNE_SLACK:
+            survivors.append(cell)
     assign = ivf_assign_cached(spark, sf_dir)
     qd = l2_distance(F.col("embedding"), lit_vector(QUERY_VEC))
     return (

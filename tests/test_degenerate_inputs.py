@@ -10,6 +10,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -112,6 +113,46 @@ def test_semdedup_zero_and_duplicate_vectors(spark, tmp_path):
     assert rows[1] is False
     assert rows[2] is True
     assert rows[3] is False and rows[4] is False
+
+
+@pytest.mark.parametrize("case", ["zero", "every_other_nan"])
+def test_sem_miner_degenerate_cell_memory(case):
+    """A full SEM_MAX_CELL group whose GEMM cosines are all non-finite
+    sends every pair to the exact fold; its scratch must stay O(pairs),
+    never O(pairs x dim) (539 MiB for zero vectors at dim 64 when the
+    fold gathered (pairs, dim) row blocks).  tracemalloc counts numpy's
+    allocations exactly, so the bound holds on any machine."""
+    import tracemalloc
+
+    import numpy as np
+    import pandas as pd
+
+    from risinglight_spark.operators.dedup import (
+        SEM_MAX_CELL,
+        _sem_mine_group_pdf,
+    )
+
+    m, dim = SEM_MAX_CELL, 64
+    if case == "zero":
+        emb = np.zeros((m, dim))
+    else:
+        emb = np.random.default_rng(0).standard_normal((m, dim))
+        emb[::2] = np.nan
+    pdf = pd.DataFrame(
+        {
+            "rep": np.arange(m, dtype=np.int64),
+            "embedding": list(emb),
+            "nrm": np.sqrt((emb * emb).sum(axis=1)),
+        }
+    )
+    tracemalloc.start()
+    try:
+        with np.errstate(invalid="ignore"):
+            _sem_mine_group_pdf(pdf)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 96 * 2**20, f"peak {peak / 2**20:.1f} MiB"
 
 
 def _write_docs(spark, tmp_path, rows):

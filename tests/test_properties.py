@@ -17,7 +17,7 @@ job, so the suite stays fast.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -1113,12 +1113,99 @@ def test_rank_primitive_persist_cache_is_bounded(spark):
     assert sorted(r["rn"] for r in rows) == list(range(1, len(rows) + 1))
 
 
+# ---------------------------------------------------------------------------
+# functions/vector.fold_sqdist / fold_dot: the one numpy form of the
+# engine's float64 left fold.  Every value must equal the scalar fold
+# 0.0 + t0 + t1 + ... bit for bit (NaN payloads aside), in both the
+# cross-matrix and the paired form, on every IEEE special.
+# ---------------------------------------------------------------------------
+
+_fold_special = st.one_of(
+    st.sampled_from(
+        [0.0, -0.0, float("nan"), float("inf"), -float("inf"), 5e-324,
+         -2.5e-308]
+    ),
+    st.floats(),
+)
+
+
+@st.composite
+def _fold_vec(draw, dim):
+    """Moderate values (so a different summation order shows in the
+    last bits), with up to two IEEE specials or arbitrary doubles."""
+    v = draw(st.lists(st.floats(-8, 8), min_size=dim, max_size=dim))
+    spots = st.tuples(st.integers(0, dim - 1), _fold_special)
+    for i, x in draw(st.lists(spots, max_size=2)):
+        v[i] = x
+    return v
+
+
+@st.composite
+def _fold_operands(draw):
+    dim = draw(st.integers(1, 70))
+    a = draw(st.lists(_fold_vec(dim), min_size=1, max_size=4))
+    # duplicate rows: b may reuse a's rows, and repeat its own
+    b = draw(st.lists(_fold_vec(dim) | st.sampled_from(a), min_size=1,
+                      max_size=4))
+    b += draw(st.lists(st.sampled_from(b), max_size=2))
+    pairs = draw(
+        st.lists(
+            st.tuples(
+                st.integers(0, len(a) - 1), st.integers(0, len(b) - 1)
+            ),
+            max_size=10,
+        )
+    )
+    return a, b, pairs
+
+
+def _scalar_fold(x, y, square):
+    acc = 0.0
+    for u, v in zip(x, y):
+        acc = acc + ((u - v) * (u - v) if square else u * v)
+    return acc
+
+
+@settings(max_examples=80, deadline=None)
+@given(_fold_operands())
+@example(([[-0.0]], [[1.0]], [(0, 0)]))  # 0.0 + -0.0 is +0.0
+def test_fold_kernels_match_scalar_fold(operands):
+    import math
+
+    import numpy as np
+
+    from risinglight_spark.functions import vector as V
+
+    a, b, pairs = operands
+    rows = np.asarray([i for i, _ in pairs], dtype=np.int64)
+    cols = np.asarray([j for _, j in pairs], dtype=np.int64)
+
+    def bits(x):
+        return "nan" if math.isnan(x) else np.float64(x).view(np.int64)
+
+    for fold, square in ((V.fold_sqdist, True), (V.fold_dot, False)):
+        with np.errstate(all="ignore"):
+            cross = fold(a, b)
+            paired = fold(a, b, rows, cols)
+        assert cross.shape == (len(a), len(b))
+        assert [[bits(x) for x in r] for r in cross.tolist()] == [
+            [bits(_scalar_fold(x, y, square)) for y in b] for x in a
+        ]
+        assert [bits(x) for x in paired.tolist()] == [
+            bits(_scalar_fold(a[i], b[j], square)) for i, j in pairs
+        ]
+
+
 def test_knn_local_topk_matches_bruteforce(spark):
     """r15: _knn_local_topk's GEMM-prefilter + exact-fold recompute
     must emit exactly the per-partition top-k the one-phase form
     produced — same rows, same exact-left-fold distances — including
-    under duplicate embeddings (tie storms) and both code paths
-    (exact and probe_cells/IVF)."""
+    under duplicate embeddings (tie storms), NaN embeddings (NaN
+    distances rank last, as in Spark and DuckDB; a partition may hold
+    fewer than k finite rows) and both code paths (exact and
+    probe_cells/IVF)."""
+    import math
+
     import numpy as np
     import pandas as pd
 
@@ -1136,8 +1223,22 @@ def test_knn_local_topk_matches_bruteforce(spark):
     tid = rng.permutation(10_000)[:m].astype(np.int64)
     lab = rng.integers(0, 4, m).astype(np.int64)
     cells = rng.integers(0, 3, m)
+    probe_cells = {
+        c: np.flatnonzero(rng.random(nt) < 0.6).astype(np.int64)
+        for c in range(3)
+    }
+    # NaN input: most train rows and one test vector are all-NaN
+    cemb_nan = cemb.copy()
+    cemb_nan[rng.random(m) < 0.8] = np.nan
+    temb_nan = temb.copy()
+    temb_nan[3] = np.nan
 
-    def brute(rows_iter, tsel):
+    def nan_last(dist):
+        """(dist NaN-last) sort key; Spark returns a NaN dist as NULL."""
+        nan = dist is None or math.isnan(dist)
+        return (nan, 0.0 if nan else dist)
+
+    def brute(rows_iter, tsel, temb):
         """one-phase reference: exact fold over every (test, row)."""
         out = []
         rows = list(rows_iter)
@@ -1150,70 +1251,72 @@ def test_knn_local_topk_matches_bruteforce(spark):
                     d = e64[i] - temb[j][i]
                     acc += d * d
                 cand.append((np.sqrt(acc), rid, rlab))
-            cand.sort()
+            cand.sort(key=lambda c: (nan_last(c[0]), c[1]))
             for dist, rid, rlab in cand[: min(k, len(cand))]:
                 out.append(
-                    (int(tids[j]), int(tlab[j]), int(rid), float(dist), int(rlab))
+                    (int(tids[j]), int(tlab[j]), int(rid), nan_last(dist),
+                     int(rlab))
                 )
         return sorted(out)
 
-    pdf = pd.DataFrame(
-        {
-            "train_id": tid,
-            "c_emb": [cemb[i] for i in range(m)],
-            "nn_label": lab,
-            "cell": cells,
-        }
-    )
-    # hash-partition by value (round-robin repartition(4) assigns rows
-    # plan-dependently, so two executions need not agree on partition
-    # contents); the pid map makes the reference partition-faithful
-    train = spark.createDataFrame(pdf).repartition(4, "train_id")
-    pid_of = {
-        r.train_id: r.pid
-        for r in train.withColumn("pid", F.spark_partition_id())
-        .select("train_id", "pid")
-        .collect()
-    }
-    by_pid: dict = {}
-    for i in range(m):
-        by_pid.setdefault(pid_of[int(tid[i])], []).append(
-            (int(tid[i]), cemb[i], int(lab[i]), int(cells[i]))
+    def emitted(df):
+        return sorted(
+            (r.test_id, r.true_label, r.train_id, nan_last(r.dist),
+             r.nn_label)
+            for r in df.collect()
         )
 
-    # exact path
-    got = sorted(
-        (r.test_id, r.true_label, r.train_id, r.dist, r.nn_label)
-        for r in _knn_local_topk(
-            train, tids, temb, tlab, dim, k
-        ).collect()
-    )
-    want = []
-    for rows in by_pid.values():
-        want += brute([(r[0], r[1], r[2]) for r in rows], range(nt))
-    assert got == sorted(want)
+    for cemb, temb in ((cemb, temb), (cemb_nan, temb_nan)):
+        pdf = pd.DataFrame(
+            {
+                "train_id": tid,
+                "c_emb": [cemb[i] for i in range(m)],
+                "nn_label": lab,
+                "cell": cells,
+            }
+        )
+        # hash-partition by value (round-robin repartition(4) assigns
+        # rows plan-dependently, so two executions need not agree on
+        # partition contents); the pid map makes the reference
+        # partition-faithful
+        train = spark.createDataFrame(pdf).repartition(4, "train_id")
+        pid_of = {
+            r.train_id: r.pid
+            for r in train.withColumn("pid", F.spark_partition_id())
+            .select("train_id", "pid")
+            .collect()
+        }
+        by_pid: dict = {}
+        for i in range(m):
+            by_pid.setdefault(pid_of[int(tid[i])], []).append(
+                (int(tid[i]), cemb[i], int(lab[i]), int(cells[i]))
+            )
 
-    # IVF path: each cell scores only its probing tests
-    probe_cells = {
-        c: np.flatnonzero(rng.random(nt) < 0.6).astype(np.int64)
-        for c in range(3)
-    }
-    got = sorted(
-        (r.test_id, r.true_label, r.train_id, r.dist, r.nn_label)
-        for r in _knn_local_topk(
-            train, tids, temb, tlab, dim, k, probe_cells=probe_cells
-        ).collect()
-    )
-    want = []
-    for rows in by_pid.values():
-        by_cell: dict = {}
-        for rid, emb, rlab, c in rows:
-            by_cell.setdefault(c, []).append((rid, emb, rlab))
-        for c, crows in by_cell.items():
-            tsel = probe_cells.get(int(c))
-            if tsel is not None and len(tsel):
-                want += brute(crows, tsel)
-    assert got == sorted(want)
+        # exact path
+        got = emitted(_knn_local_topk(train, tids, temb, tlab, k))
+        want = []
+        for rows in by_pid.values():
+            want += brute(
+                [(r[0], r[1], r[2]) for r in rows], range(nt), temb
+            )
+        assert got == sorted(want)
+
+        # IVF path: each cell scores only its probing tests
+        got = emitted(
+            _knn_local_topk(
+                train, tids, temb, tlab, k, probe_cells=probe_cells
+            )
+        )
+        want = []
+        for rows in by_pid.values():
+            by_cell: dict = {}
+            for rid, emb, rlab, c in rows:
+                by_cell.setdefault(c, []).append((rid, emb, rlab))
+            for c, crows in by_cell.items():
+                tsel = probe_cells.get(int(c))
+                if tsel is not None and len(tsel):
+                    want += brute(crows, tsel, temb)
+        assert got == sorted(want)
 
 
 # ---------------------------------------------------------------------------
@@ -1306,6 +1409,7 @@ def test_sem_gemm_miner_band_and_chunking():
 
     import numpy as np
 
+    from risinglight_spark.functions import vector as V
     from risinglight_spark.operators import dedup as D
 
     tau = D.SEM_TAU
@@ -1326,11 +1430,11 @@ def test_sem_gemm_miner_band_and_chunking():
         rid += 1
     want = _sem_reference_dropped(rows, tau)
     assert _sem_kernel_dropped(rows) == want
-    old_chunk = D._SEM_GEMM_CHUNK
+    old_chunk = V.SCRATCH_ELEMS
     try:
-        D._SEM_GEMM_CHUNK = 8  # block of <=1 row per GEMM
+        V.SCRATCH_ELEMS = 8  # block of <=1 row per GEMM
         assert _sem_kernel_dropped(rows) == want
-        D._SEM_GEMM_CHUNK = 64
+        V.SCRATCH_ELEMS = 64
         assert _sem_kernel_dropped(rows) == want
     finally:
-        D._SEM_GEMM_CHUNK = old_chunk
+        V.SCRATCH_ELEMS = old_chunk
